@@ -3,7 +3,7 @@
 The contract under test: fit -> save -> (fresh session) -> load gives
 IDENTICAL scores/codes with ZERO fit jobs, and a corpus WRITE invalidates
 the artifact (token mismatch -> refit).  A "fresh session" is simulated by
-clearing the in-process memo dicts — their keys include applicationId, so
+forgetting the in-process memo entries — their keys include applicationId, so
 a genuinely new session starts exactly this way: memory cold, store warm.
 """
 
@@ -15,24 +15,16 @@ import pytest
 
 from yupana_spark.datapipe.artifacts import (ArtifactStore, artifact_name,
                                              corpus_token)
+from yupana_spark.memo import forget
 
 SF = "/root/testdata/sf0.001"
 
 
 def _fresh_memo():
     """Cold in-process memos = what a restarted deployment starts with."""
-    from yupana_spark.datapipe import bpe, dsir, sample, simsearch, text
-
-    from yupana_spark.datapipe import ppx
-
-    text._LM_CACHE.clear()
-    simsearch._CENTERS_CACHE.clear()
-    bpe._BPE_CACHE.clear()
-    dsir._RATIO_CACHE.clear()
-    dsir._WARR_CACHE.clear()
-    dsir._BUCKETS_CACHE.clear()
-    ppx._PPX_CACHE.clear()
-    sample._MIX_CACHE.clear()
+    forget(lambda k: k[0] in ("unigram_lm", "kmeans", "pq", "ivfadc", "bpe",
+                              "dsir_ratio", "dsir.warr", "dsir_buckets",
+                              "ppx_uni", "mix_counts"))
 
 
 def _jobs_in_group(spark, group, fn):

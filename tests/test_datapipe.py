@@ -5,6 +5,8 @@ exercised on data that actually contains duplicates."""
 import pytest
 from pyspark.sql import functions as F
 
+from yupana_spark.memo import forget
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -491,14 +493,17 @@ def test_minhash_gate_small_precomputed(docs_with_dups):
         probe = as_set(minhash_dedup_pairs(docs_with_dups, threshold=0.7,
                                            artifacts=arts, banded=banded))
         sc = docs_with_dups.sparkSession.sparkContext
-        n_jobs = sc.statusTracker().getJobIdsForGroup(None)
-        small = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
-                                    artifacts=arts, banded=banded,
-                                    gate_small=True)
+        sc.setJobGroup("gate-small-construct", "gate-small-construct")
+        try:
+            small = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
+                                        artifacts=arts, banded=banded,
+                                        gate_small=True)
+        finally:
+            sc.setJobGroup(None, None)
         # construction was pure plan-building: no driver-blocking
         # count/avg job ahead of the caller's action
-        assert len(sc.statusTracker().getJobIdsForGroup(None)) \
-            == len(n_jobs)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "gate-small-construct")) == []
         large = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
                                     artifacts=arts, banded=banded,
                                     gate_small=False)
@@ -1289,7 +1294,7 @@ def test_prepared_plan_cache_semantics(spark):
     qs = ent.queries()
     assert qs["q_having"](spark, SF) is qs["q_having"](spark, SF)
     # dp_neardup_scale moved INTO the cache (its eager index builds are
-    # memoized in _NEARDUP_ARTS, so the returned 4-arm union is a pure
+    # memoized as "nd_arts", so the returned 4-arm union is a pure
     # lazy plan); dp_ann_approx keeps eager per-call search work and must
     # rebuild every call
     assert qs["dp_neardup_scale"](spark, SF) is \
@@ -2463,8 +2468,7 @@ def test_quality_lr_classifier(spark):
     from pyspark.sql import functions as F
 
     from yupana_spark.datapipe.artifacts import ArtifactStore, corpus_token
-    from yupana_spark.datapipe.classify import (_LR_CACHE,
-                                                quality_lr_features,
+    from yupana_spark.datapipe.classify import (quality_lr_features,
                                                 quality_lr_fit,
                                                 quality_lr_holdout_accuracy,
                                                 quality_lr_score)
@@ -2489,7 +2493,7 @@ def test_quality_lr_classifier(spark):
     tok = corpus_token("/root/testdata/sf0.001/documents.parquet")
     art2 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
                           cache_key="t", store=st, store_token=tok)
-    _LR_CACHE.clear()
+    forget(lambda k: k[0] == "quality_lr")
     sc = spark.sparkContext
     sc.setJobGroup("qlr-load", "qlr-load")
     art3 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
@@ -2511,7 +2515,7 @@ def test_quality_lr_classifier(spark):
     sn = docs.select(quality_lr_score(F.col("text"), artn).alias("p")) \
         .agg(F.min("p").alias("lo"), F.max("p").alias("hi")).collect()[0]
     assert 0.0 <= sn["lo"] <= sn["hi"] <= 1.0
-    _LR_CACHE.clear()
+    forget(lambda k: k[0] == "quality_lr")
     artn2 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
                            ngram_buckets=128, cache_key="tn",
                            store=st, store_token=tok)
@@ -2570,8 +2574,7 @@ def test_quality_lr_label_identity_and_nulls(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from yupana_spark.datapipe.classify import (_LR_CACHE,
-                                                quality_lr_features,
+    from yupana_spark.datapipe.classify import (quality_lr_features,
                                                 quality_lr_fit)
 
     docs = spark.createDataFrame(
@@ -2584,7 +2587,7 @@ def test_quality_lr_label_identity_and_nulls(spark):
     with pytest.raises(ValueError, match="label_key"):
         quality_lr_fit(docs, label=feats["stopword_ratio"] >= 0.1,
                        cache_key="x")
-    _LR_CACHE.clear()
+    forget(lambda k: k[0] == "quality_lr")
     a1 = quality_lr_fit(docs, label=feats["stopword_ratio"] >= 0.1,
                         label_key="sw", cache_key="x")
     a2 = quality_lr_fit(docs, label=feats["alpha_ratio"] >= 0.99,
@@ -2795,9 +2798,7 @@ def test_dsir_buckets_artifact_matches_live(spark, tmp_path):
         assert via[i][1] == base[i][1]
         assert via[i][0] == pytest.approx(base[i][0], abs=1e-9)
     # a fresh session (cold memo) loads the artifact with zero fit jobs
-    from yupana_spark.datapipe import dsir as _dsir
-
-    _dsir._BUCKETS_CACHE.clear()
+    forget(lambda k: k[0] == "dsir_buckets")
     sc = spark.sparkContext
     sc.setJobGroup("gb-load", "gb-load")
     try:
@@ -3814,82 +3815,6 @@ def test_salted_quota_rank_identical_and_skew_bounded(spark):
     plan = salted._jdf.queryExecution().executedPlan().toString()
     import re
     assert re.search(r"windowspecdefinition\(dom#\d+, __salt#\d+", plan)
-
-
-def test_vectorized_signals_match_folds(spark):
-    """The Arrow-vectorized repetition-signal mirror (r15 experiment,
-    datapipe/vectorized.py) must reproduce the HOF folds' four rounded
-    signals EXACTLY across the edge corpus — NULL text, empty-after-
-    split, 1/2-word (the lone-shingle floor), all-duplicate words,
-    repeated trigrams, a dominant 2-gram, duplicated 5-grams, and a
-    clean long doc — and across a real fixture slice."""
-    from yupana_spark.datapipe.text import (ngram_char_frac_cols,
-                                            repetition_stats, words)
-    from yupana_spark.datapipe.vectorized import (rep_ngram_cols,
-                                                  rep_ngram_signals)
-
-    rows = [
-        (1, None),
-        (2, "   "),
-        (3, "one"),
-        (4, "two words"),
-        (5, "spam spam spam spam spam spam spam spam spam spam"),
-        (6, "a b c a b c a b c a b c a b c"),
-        (7, "x y x y x y x y x y x y"),
-        (8, "p q r s t p q r s t p q r s t unique tail here now"),
-        (9, "the quick brown fox jumps over the lazy dog and keeps "
-            "going through the quiet field for a while longer today"),
-        (10, "aa aa bb bb aa aa bb bb cc"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string") \
-        .withColumn("__lw", words(F.lower(F.col("text"))))
-    rep = repetition_stats(F.col("__lw"), as_words=True)
-    specs = [(2, "top", "top2_char_frac"), (5, "dup", "dup5_char_frac")]
-    want_df = docs.select(
-        "doc_id",
-        rep["dup_word_ratio"].alias("dup_word_ratio"),
-        rep["dup_trigram_ratio"].alias("dup_trigram_ratio"),
-        *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
-                              specs))
-    staged = docs.withColumn("__sig", rep_ngram_signals(F.col("__lw")))
-    mc = rep_ngram_cols(F.col("__sig"), F.col("__lw"),
-                        F.length(F.col("text")))
-    got_df = staged.select("doc_id", *[mc[c].alias(c) for c in
-                                       ("dup_word_ratio",
-                                        "dup_trigram_ratio",
-                                        "top2_char_frac",
-                                        "dup5_char_frac")])
-    want = {r["doc_id"]: tuple(r)[1:] for r in want_df.collect()}
-    got = {r["doc_id"]: tuple(r)[1:] for r in got_df.collect()}
-    assert want == got
-    # non-vacuous: every signal fires somewhere in the edge corpus
-    import math
-    cols = list(zip(*[v for v in want.values()]))
-    for i, name in enumerate(("dup_word_ratio", "dup_trigram_ratio",
-                              "top2_char_frac", "dup5_char_frac")):
-        assert any((x or 0) > 0 and not math.isnan(x or 0)
-                   for x in cols[i]), name
-    # real fixture slice (first 200 docs at sf0.001)
-    fx = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-          .limit(200)
-          .withColumn("__lw", words(F.lower(F.col("text")))))
-    w_fx = {r["doc_id"]: tuple(r)[1:] for r in fx.select(
-        "doc_id",
-        repetition_stats(F.col("__lw"), as_words=True)["dup_word_ratio"]
-        .alias("a"),
-        repetition_stats(F.col("__lw"), as_words=True)["dup_trigram_ratio"]
-        .alias("b"),
-        *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
-                              specs)).collect()}
-    fxs = fx.withColumn("__sig", rep_ngram_signals(F.col("__lw")))
-    mfx = rep_ngram_cols(F.col("__sig"), F.col("__lw"),
-                         F.length(F.col("text")))
-    g_fx = {r["doc_id"]: tuple(r)[1:] for r in fxs.select(
-        "doc_id", mfx["dup_word_ratio"].alias("a"),
-        mfx["dup_trigram_ratio"].alias("b"),
-        mfx["top2_char_frac"].alias("top2_char_frac"),
-        mfx["dup5_char_frac"].alias("dup5_char_frac")).collect()}
-    assert w_fx == g_fx
 
 
 def test_whitespace_class_engine_agreement(spark):

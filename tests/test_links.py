@@ -7,6 +7,7 @@ import pytest
 
 from yupana_spark import E, Tsdb, default_schema, query
 from yupana_spark.expressions import InvalidQueryError
+from yupana_spark.memo import forget
 
 FROM = dt.datetime(1995, 1, 1)
 TO = dt.datetime(2002, 1, 1)
@@ -109,17 +110,17 @@ def test_in_pushdown_gate(tsdb, monkeypatch):
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    C.Tsdb._PHRASE_CACHE.clear()
+    forget(lambda k: k[0] == "tsdb.phrase")
     pushed = tsdb.sql(sql)
     assert "In(l_partkey" in plan_of(pushed)
     assert "LeftSemi" not in plan_of(pushed)
 
-    C.Tsdb._PHRASE_CACHE.clear()
+    forget(lambda k: k[0] == "tsdb.phrase")
     monkeypatch.setattr(C, "_IN_PUSHDOWN_GATE", 0)
     joined = tsdb.sql(sql)
     assert "LeftSemi" in plan_of(joined)
     assert joined.collect() == pushed.collect()
-    C.Tsdb._PHRASE_CACHE.clear()
+    forget(lambda k: k[0] == "tsdb.phrase")
 
 
 def test_in_pushdown_member_pred_null_semantics(spark):

@@ -26,5 +26,8 @@ def test_small_posture_static_sizing(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert 4 <= parts <= spark.sparkContext.defaultParallelism
+    # each branch states its whole posture: the full branch's
+    # parallelismFirst=true must not leak into the small one
+    assert spark.conf.get(_PF) == "false"
     # restore the full posture for whatever test runs next in the session
     tune_for_volume(spark, 1 << 62)

@@ -75,8 +75,8 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from yupana_spark.schema import (_SPLIT_CACHE, cached_parquet,
-                                     invalidate_parquet_cache)
+    from yupana_spark.memo import peek
+    from yupana_spark.schema import cached_parquet, invalidate_parquet_cache
 
     n = 60_000
     src = str(tmp_path / "fact.parquet")
@@ -88,7 +88,7 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
 
     df = cached_parquet(spark, src, time_col="ts")
     app = spark.sparkContext.applicationId
-    out_dir = _SPLIT_CACHE.get((app, src))
+    out_dir = peek(("schema.split", app, src))
     assert out_dir is not None, "fact-sized file must be re-ingested"
     import os
     parts = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
@@ -110,11 +110,12 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
     small = str(tmp_path / "dim.parquet")
     pq.write_table(pa.table({"k": pa.array(range(10))}), small)
     cached_parquet(spark, small)
-    assert (app, small) not in _SPLIT_CACHE
+    assert peek(("schema.split", app, small)) is None
 
     # invalidation drops both the plan memo and the rewrite memo
     invalidate_parquet_cache(src)
-    assert (app, src) not in _SPLIT_CACHE
+    assert peek(("schema.split", app, src)) is None
+    assert peek(("schema.parquet", app, src)) is None
 
 
 def test_ingest_gzip_jsonl(spark, wh, tmp_path):

@@ -15,6 +15,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from yupana_spark.memo import peek  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("PROFILE_PASSES", "3"))
 
@@ -38,7 +40,8 @@ def timeit(name, df_fn):
 def profile_neardup(spark):
     import __spark_entry__ as ent
     from pyspark.sql import functions as F
-    from yupana_spark.datapipe.dedup import (embedding_neardup_pairs_ivf,
+    from yupana_spark.datapipe.dedup import (PAIR_GATE,
+                                             embedding_neardup_pairs_ivf,
                                              minhash_cross_pairs,
                                              minhash_dedup_pairs,
                                              simhash_near_pairs)
@@ -46,8 +49,9 @@ def profile_neardup(spark):
     print("== dp_neardup_scale arms ==")
     # populate the artifact memo exactly as the bench does
     _noop(ent.queries()["dp_neardup_scale"](spark, SF_DIR))
-    akey = (spark.sparkContext.applicationId, SF_DIR)
-    arts, sigs, cells, banded, ex_mh, ex_sh, ex_el = ent._NEARDUP_ARTS[akey]
+    app = spark.sparkContext.applicationId
+    arts, sigs, cells, banded, ex_mh, ex_sh, ex_el = peek(
+        ("nd_arts", app, SF_DIR))
     docs = ent._docs(spark, SF_DIR)
     emb = ent._emb(spark, SF_DIR)
     n_emb = ent._fixture_count(spark, SF_DIR, "embeddings", emb)
@@ -55,7 +59,7 @@ def profile_neardup(spark):
     # mirror the bundle's r18 shape: the ingest-time gate decision is in
     # the session memo (populated by the warm-up call above), so the arm
     # profile attributes the same per-pass work the bench sees
-    gate_mh = ent._NEARDUP_GATE[akey]
+    gate_mh = peek(("nd_gate", app, SF_DIR, 0.5, 32, 8, 0.15, PAIR_GATE))
     mh = lambda: minhash_dedup_pairs(docs, threshold=0.5, artifacts=arts,
                                      banded=banded,
                                      gate_small=gate_mh).select("id_a",
@@ -127,8 +131,7 @@ def profile_langid(spark):
                       .join(bpe(), "doc_id", "left")
                       .join(bx(), "doc_id", "left"))
     timeit("4-frame join", joined)
-    ckey = (spark.sparkContext.applicationId, SF_DIR)
-    cuts = ent._PPX_CUTS[ckey]
+    cuts = peek(("ppx_cuts", spark.sparkContext.applicationId, SF_DIR))
     timeit("FULL (join+buckets)",
            lambda: ppx_buckets(joined(), "big_xent", ("lang_pred",),
                                cuts=cuts).withColumnRenamed("bucket",
@@ -159,8 +162,7 @@ def profile_textstats(spark):
     docs = ent._docs(spark, SF_DIR, fan_out=True)
     did = F.col("doc_id")
     staged = docs.withColumn("__bw", _words_safe(F.col("text")))
-    esk = (spark.sparkContext.applicationId, SF_DIR)
-    esi = ent._ES_INDEX[esk]
+    esi = peek(("es_index", spark.sparkContext.applicationId, SF_DIR))
     ess = lambda: cut_starts_fused(staged, staged.filter(did % 97 == 0),
                                    n=8, dup_index=esi, words_col="__bw")
     lined = docs.select(

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from . import expressions as E
 from . import types as yt
 from .expressions import Expr, InvalidQueryError
+from .memo import memo
 from .query import Query, validate
 from .schema import Schema, Table
 
@@ -520,44 +521,28 @@ class Tsdb:
                                 time_bounds=time_bounds)
 
     # -- static small-input tuning -------------------------------------------
-    _BYTES_CACHE: Dict[tuple, int] = {}
-    # pgwire serves queries from concurrent threads while a write thread
-    # purges stale entries: every read/insert/purge holds this lock (dict
-    # mutation during the purge's iteration would otherwise RuntimeError).
-    # The epoch closes the TOCTOU window: a reader that statted the file
-    # BEFORE a purge must not re-insert its stale size AFTER it — inserts
-    # are dropped when any purge ran since the reader's snapshot
-    _BYTES_CACHE_LOCK = threading.Lock()
-    _BYTES_EPOCH = 0
-
     def _table_bytes(self, table: str) -> int:
         """On-disk bytes of a table's source (memoized); 'unknown' counts as
         big so the AQE posture is kept whenever we can't cheaply tell."""
-        # keyed by the LIVE warehouse root (distinct tmpdirs per default
-        # instance must not share sizes); writes delete their table's entry
+        t = self.schema.table(table)
+        path = os.path.join(self.sf_dir, t.path or f"{table}.parquet")
         wh = self._wh_maybe
-        key = (self.sf_dir, wh.root if wh is not None else None, table)
-        with Tsdb._BYTES_CACHE_LOCK:
-            b = Tsdb._BYTES_CACHE.get(key)
-            epoch = Tsdb._BYTES_EPOCH
-        if b is None:
-            b = 1 << 62
+        if wh is not None and wh.exists(table):
+            path = wh.path(table)
+
+        # keyed by the resolved path: a warehouse table's entry is dropped
+        # by the write that swaps it (Warehouse._swap_and_invalidate), and a
+        # stat racing that swap is returned but never stored
+        def stat() -> int:
             try:
-                t = self.schema.table(table)
-                path = os.path.join(self.sf_dir, t.path or f"{table}.parquet")
-                if wh is not None and wh.exists(table):
-                    path = wh.path(table)
                 if os.path.isdir(path):
-                    b = sum(e.stat().st_size for e in os.scandir(path)
-                            if e.is_file())
-                else:
-                    b = os.path.getsize(path)
+                    return sum(e.stat().st_size for e in os.scandir(path)
+                               if e.is_file())
+                return os.path.getsize(path)
             except OSError:
-                pass
-            with Tsdb._BYTES_CACHE_LOCK:
-                if Tsdb._BYTES_EPOCH == epoch:   # no purge raced the stat
-                    Tsdb._BYTES_CACHE[key] = b
-        return b
+                return 1 << 62
+
+        return memo(("tsdb.bytes", path), stat)
 
     def _tune_for_volume(self, nbytes: int) -> None:
         """Static small-input fast path vs AQE posture — see
@@ -772,11 +757,6 @@ class Tsdb:
             raise
 
     # -- dictionary-dimension ids (Dictionary.scala:24-105) -------------------
-    _DICT_CACHE: Dict[tuple, Dict[str, int]] = {}
-    # memoized phrase-match key sets for static link sources (small,
-    # localCheckpoint-materialized); keyed by (appId, sf_dir, link, phrases)
-    # (appId, sf_dir, link, phrases) -> (ids frame, key literals | None)
-    _PHRASE_CACHE: Dict[tuple, Tuple[DataFrame, Optional[list]]] = {}
     _DICT_CAP = 100_000  # beyond this a dim is not dictionary-shaped; at
     # cluster scale you'd materialize a dictionary table + broadcast join
     # instead of a map literal
@@ -807,18 +787,22 @@ class Tsdb:
                 if persisted is not None:
                     out[dim] = persisted
                     continue
-            # sorted-value fallback for never-ingested (fixture) data
-            key = (self.spark.sparkContext.applicationId, self.sf_dir,
-                   table.name, dim)
-            if key not in self._DICT_CACHE:
+            # sorted-value fallback for never-ingested (fixture) data;
+            # None = too wide: id() keeps the hash surrogate
+            def build():
                 vals = (self._load(table.name).select(dim).distinct()
                         .limit(self._DICT_CAP + 1).collect())
                 if len(vals) > self._DICT_CAP:
-                    continue  # too wide: id() keeps the hash surrogate
+                    return None
                 ordered = sorted(r[0] for r in vals if r[0] is not None)
-                self._DICT_CACHE[key] = {v: i + 1
-                                         for i, v in enumerate(ordered)}
-            out[dim] = self._DICT_CACHE[key]
+                return {v: i + 1 for i, v in enumerate(ordered)}
+
+            wh = self._wh_maybe
+            ids = memo(("tsdb.dict", self.spark.sparkContext.applicationId,
+                        self.sf_dir, wh.root if wh is not None else None,
+                        table.name, dim), build)
+            if ids is not None:
+                out[dim] = ids
         return out
 
     # -- predicate-rewriting links (substituteLinks, TsdbBase.scala:322-347) --
@@ -890,8 +874,8 @@ class Tsdb:
         # build, so a warehouse index rewrite (directory swap) after
         # build yields deleted-file reads, not updated matches.  Callers
         # that mutate the index must re-plan (Tsdb plans are cheap to
-        # rebuild; warehouse writes bump _BYTES_EPOCH for the same
-        # reason).  ≙ the reference: a TSDB query captures the
+        # rebuild; warehouse writes forget the table's volume memo for
+        # the same reason).  ≙ the reference: a TSDB query captures the
         # ItemsInvertedIndex state at mapReduceEngine build.
         def key_literals(ids_df):
             rows = ids_df.limit(_IN_PUSHDOWN_GATE + 1).collect()
@@ -919,18 +903,18 @@ class Tsdb:
                 # repeated queries skip the tokenizer scan (≙ the reference
                 # caching link catalogs, InvertedIndexDaoHBase reuse); the
                 # mutable warehouse-index path above is never cached
-                ck = (self.spark.sparkContext.applicationId, self.sf_dir,
-                      link.name, tuple(sorted(map(str, phrases))))
-                cached = Tsdb._PHRASE_CACHE.get(ck)
-                if cached is None:
+                def build():
                     items = link.source(self.spark, self.sf_dir)
                     ids = phrase_match_ids(items, link.key_column,
                                            link.text_column, phrases)
                     ids = ids.localCheckpoint(eager=True)
-                    cached = (ids, key_literals(ids))
-                    if len(Tsdb._PHRASE_CACHE) < 64:
-                        Tsdb._PHRASE_CACHE[ck] = cached
-                ids, keys = cached
+                    return ids, key_literals(ids)
+
+                ids, keys = memo(
+                    ("tsdb.phrase", self.spark.sparkContext.applicationId,
+                     self.sf_dir, link.name,
+                     tuple(sorted(map(str, phrases)))),
+                    build, max_entries=64)
             else:
                 keys = key_literals(ids)
             how = "left_anti" if anti else "left_semi"

@@ -38,9 +38,11 @@ import json
 import os
 import shutil
 import zipfile
-from typing import Any, Dict, Optional, Tuple
+from typing import Any, Callable, Dict, Optional, Tuple
 
 import numpy as np
+
+from ..memo import memo
 
 _META = "meta.json"
 # everything a torn/corrupt payload read can raise — all degrade to a
@@ -276,19 +278,39 @@ def artifact_name(prefix: str, *params: Any) -> str:
     return f"{prefix}_{digest}"
 
 
-def store_name(prefix: str, cache_key, store, store_token,
-               *params: Any) -> Optional[str]:
-    """The shared store-gating guard every fit function uses: None unless
-    BOTH store and token are present; persistence requires ``cache_key``
-    (the corpus identity the name hashes).  ``params`` must carry every
-    fit input that changes the artifact — hyperparameters INCLUDING
-    iteration counts and any label identity — so a changed fit never
-    silently loads a stale artifact."""
-    if store is None or store_token is None:
-        return None
+def fitted(spark, prefix: str, cache_key, params: tuple,
+           fit: Callable[[], Any], store=None,
+           store_token: Optional[str] = None,
+           load: Optional[Callable[[str], Any]] = None,
+           save: Optional[Callable[[str, Any], Any]] = None) -> Any:
+    """The memo -> store -> fit -> save sequence every sample fit runs.
+
+    ``params`` must carry every fit input that changes the artifact —
+    hyperparameters INCLUDING iteration counts and any label identity; it
+    builds BOTH the session memo key ``(prefix, applicationId, cache_key,
+    *params)`` and the artifact name, so the two cannot drift and a
+    changed fit never silently reuses a stale artifact.  Without
+    ``cache_key`` the fit runs unmemoized, and persisting requires it (the
+    corpus identity the name hashes).  With BOTH a store and a token,
+    ``load(name)`` returns the stored artifact or None, and ``save(name,
+    art)`` persists a fresh fit and returns the value this session uses."""
+    name = None
+    if store is not None and store_token is not None:
+        if cache_key is None:
+            raise ValueError("store persistence requires cache_key")
+        name = artifact_name(prefix, cache_key, *params)
+
+    def build():
+        got = load(name) if name is not None else None
+        if got is not None:
+            return got
+        art = fit()
+        return art if name is None else save(name, art)
+
     if cache_key is None:
-        raise ValueError("store persistence requires cache_key")
-    return artifact_name(prefix, cache_key, *params)
+        return build()
+    return memo((prefix, spark.sparkContext.applicationId, cache_key)
+                + tuple(params), build)
 
 
 def default_store() -> ArtifactStore:

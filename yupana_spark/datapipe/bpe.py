@@ -34,8 +34,6 @@ from pyspark.sql import types as T
 _EOW = "</w>"      # end-of-word marker: normalized words are
                    # [a-z0-9]+, so it cannot collide with content
 
-_BPE_CACHE: dict = {}
-
 
 def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
             sample_cap: int = 2048, id_col: str = "doc_id",
@@ -55,24 +53,25 @@ def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
     of ``bpe_save``/``bpe_load``): a fresh session loads the JSON with
     zero Spark jobs; a corpus write invalidates by token.
     """
-    key = None
-    if cache_key is not None:
-        key = ("bpe", df.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, n_merges, sample_cap)
-        hit = _BPE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .artifacts import fitted
 
-    name = store_name("bpe", cache_key, store, store_token,
-                      text_col, n_merges, sample_cap)
-    if name is not None:
+    def load(name):
         got = store.load_json(name, store_token)
-        if got is not None:
-            merges = [tuple(p) for p in got[0]]
-            if key is not None:
-                _BPE_CACHE[key] = merges
-            return merges
+        return got and [tuple(p) for p in got[0]]
+
+    def save(name, merges):
+        store.save_json(name, store_token, [list(p) for p in merges])
+        return merges
+
+    return fitted(df.sparkSession, "bpe", cache_key,
+                  (text_col, n_merges, sample_cap, id_col),
+                  lambda: _bpe_train(df, text_col, n_merges, sample_cap,
+                                     id_col),
+                  store, store_token, load, save)
+
+
+def _bpe_train(df: DataFrame, text_col: str, n_merges: int, sample_cap: int,
+               id_col: str) -> List[Tuple[str, str]]:
     from .simsearch import sample_rows
     from .text import normalize_text, words
 
@@ -118,10 +117,6 @@ def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
             t = tuple(ns)
             out[t] = out.get(t, 0) + c
         vocab = out
-    if name is not None:
-        store.save_json(name, store_token, [list(p) for p in merges])
-    if key is not None:
-        _BPE_CACHE[key] = merges
     return merges
 
 

@@ -248,8 +248,8 @@ def _auto_bloom(dup_index: DataFrame, k: int = 5):
     to size ``n_bits`` above the gate — an inline index pays nothing
     extra for a 'no bloom' answer.
 
-    Local-host caveat (measured, tools/bloom_ab.py): the size gate
-    predicts WHERE the join shuffles, not WHETHER the prefilter wins —
+    Local-host caveat (measured r15, numbers in docs/scale.md): the size
+    gate predicts WHERE the join shuffles, not WHETHER the prefilter wins —
     on a single box with NVMe-local shuffle the avoided exchange is
     cheaper than the 5x2 xxhash64 probes per occurrence and auto's
     filter measured 0.94x/0.88x (a LOSS) in its own designed regime.
@@ -352,8 +352,8 @@ def exactsubstr_cut_starts(df: DataFrame, text_col: str = "text",
     work pays for itself.  On a single box (local[n], NVMe shuffle)
     the designed-regime A/B measured the prefilter at 0.94x/0.88x — a
     LOSS, because the avoided exchange is cheaper there than 5x2
-    xxhash64 probes per occurrence (tools/bloom_ab.py, numbers in
-    docs/scale.md).  Enable it where shuffle crosses a network.
+    xxhash64 probes per occurrence (numbers in docs/scale.md).  Enable
+    it where shuffle crosses a network.
     """
     from .text import ngram_hashes
 

@@ -40,6 +40,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..memo import memo
+
 _U32 = 4294967296.0  # 2^32, the md5-prefix uniform denominator
 # Bigram mixing multiplier (prime; CPython's string-hash multiplier).
 # hw < 2^24 so hw1*_MIX + hw2 < 2^44 — no BIGINT overflow on any engine.
@@ -106,9 +108,6 @@ def _exploded(df: DataFrame, text_col: str, id_col: Optional[str],
         .alias("bucket"))
 
 
-_BUCKETS_CACHE: dict = {}
-
-
 def gram_buckets_fit(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", n_buckets: int = 4096,
                      bigrams: bool = True,
@@ -124,21 +123,8 @@ def gram_buckets_fit(docs: DataFrame, text_col: str = "text",
     invalidation; ``HASH_VERSION`` rides the name so a recipe change
     refits.  Values are exactly ``hashed_gram_buckets`` (pinned by
     test)."""
-    key = None
-    if cache_key is not None:
-        key = (docs.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, id_col, n_buckets, bigrams)
-        hit = _BUCKETS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .artifacts import fitted
 
-    # "m1": artifact-format tag — frames persisted before the param
-    # metadata rode the __gb field would load metadata-less and fail
-    # the consumer's recipe validation; the tag refits them once
-    name = store_name("dsir_buckets", cache_key, store, store_token,
-                      text_col, id_col, n_buckets, bigrams, HASH_VERSION,
-                      "m1")
     # the recipe params ride as FIELD METADATA (schema metadata survives
     # both localCheckpoint and the parquet artifact roundtrip), so a
     # consumer can refuse a frame built under different params instead
@@ -149,26 +135,34 @@ def gram_buckets_fit(docs: DataFrame, text_col: str = "text",
         F.col(id_col),
         hashed_gram_buckets(F.col(text_col), n_buckets, bigrams)
         .alias("__gb", metadata=meta))
-    if name is not None:
-        # the frame is CORPUS-sized (one bucket array per document), so
-        # unlike the bounded fits it must never be pinned in executor
-        # storage: the save writes the LAZY frame straight to parquet
-        # (one hash pass total) and every consumer — this session
-        # included — reads the columnar artifact lazily (load_df's
-        # single-pass posture; scoring consumes it exactly once per
-        # pass, and a parquet scan of packed longs is the cheap path)
+
+    # the frame is CORPUS-sized (one bucket array per document), so
+    # unlike the bounded fits a persisted one is never pinned in executor
+    # storage: the save writes the LAZY frame straight to parquet (one
+    # hash pass total) and every consumer — this session included — reads
+    # the columnar artifact lazily (load_df's single-pass posture; scoring
+    # consumes it exactly once per pass, and a parquet scan of packed
+    # longs is the cheap path).  Session-memo-only: materialize once or
+    # the memo would hand back the live plan and every pass would re-hash
+    # the corpus
+    def fit():
+        persisting = store is not None and store_token is not None
+        return live if persisting else live.localCheckpoint(eager=True)
+
+    def load(name):
         got = store.load_df(docs.sparkSession, name, store_token)
-        if got is None:
-            store.save_df(name, store_token, live)
-            got = store.load_df(docs.sparkSession, name, store_token)
-        gb = got[0]
-    else:
-        # session-memo-only: materialize once or the memo would hand
-        # back the live plan and every pass would re-hash the corpus
-        gb = live.localCheckpoint(eager=True)
-    if key is not None:
-        _BUCKETS_CACHE[key] = gb
-    return gb
+        return got and got[0]
+
+    def save(name, art):
+        store.save_df(name, store_token, art)
+        return load(name)
+
+    # "m1": artifact-format tag — frames persisted before the param
+    # metadata rode the __gb field would load metadata-less and fail
+    # the consumer's recipe validation; the tag refits them once
+    return fitted(docs.sparkSession, "dsir_buckets", cache_key,
+                  (text_col, id_col, n_buckets, bigrams, HASH_VERSION, "m1"),
+                  fit, store, store_token, load, save)
 
 
 def dsir_log_ratio(target: DataFrame, raw: DataFrame, text_col: str = "text",
@@ -202,9 +196,6 @@ def dsir_log_ratio(target: DataFrame, raw: DataFrame, text_col: str = "text",
     return tbl, totals
 
 
-_RATIO_CACHE: dict = {}
-
-
 def dsir_ratio_fit(target: DataFrame, raw: DataFrame,
                    text_col: str = "text", n_buckets: int = 4096,
                    alpha: float = 0.5, bigrams: bool = True,
@@ -226,46 +217,37 @@ def dsir_ratio_fit(target: DataFrame, raw: DataFrame,
     live in the meta: n_t/n_r are exact bucket-count sums, so the smoothed
     ``lr`` rebuilt from the artifact is bit-identical to the lazy path's.
     """
-    key = None
-    if cache_key is not None:
-        key = (target.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, n_buckets, alpha, bigrams)
-        hit = _RATIO_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .artifacts import fitted
 
-    name = store_name("dsir_ratio", cache_key, store, store_token,
-                      text_col, n_buckets, alpha, bigrams, HASH_VERSION)
-    if name is not None:
+    def fit():
+        tg = _exploded(target, text_col, None, n_buckets, bigrams)
+        rg = _exploded(raw, text_col, None, n_buckets, bigrams)
+        counts = (rg.groupBy("bucket").agg(F.count("*").alias("c_r"))
+                  .join(tg.groupBy("bucket")
+                        .agg(F.count("*").alias("c_t")), "bucket", "full")
+                  .select("bucket", "c_t", "c_r")
+                  .localCheckpoint(eager=True))
+        # totals = exact column sums over the bounded counts frame (every
+        # gram lands in some bucket), so pricing needs no second corpus
+        # pass
+        tot = counts.agg(F.sum("c_t").alias("n_t"),
+                         F.sum("c_r").alias("n_r")).collect()[0]
+        return counts, float(tot["n_t"] or 0.0), float(tot["n_r"] or 0.0)
+
+    def load(name):
         got = store.load_df(target.sparkSession, name, store_token)
-        if got is not None:
-            art = (got[0], float(got[1]["n_t"]), float(got[1]["n_r"]))
-            if key is not None:
-                _RATIO_CACHE[key] = art
-            return art
-    tg = _exploded(target, text_col, None, n_buckets, bigrams)
-    rg = _exploded(raw, text_col, None, n_buckets, bigrams)
-    counts = (rg.groupBy("bucket").agg(F.count("*").alias("c_r"))
-              .join(tg.groupBy("bucket").agg(F.count("*").alias("c_t")),
-                    "bucket", "full")
-              .select("bucket", "c_t", "c_r")
-              .localCheckpoint(eager=True))
-    # totals = exact column sums over the bounded counts frame (every gram
-    # lands in some bucket), so pricing needs no second corpus pass
-    tot = counts.agg(F.sum("c_t").alias("n_t"),
-                     F.sum("c_r").alias("n_r")).collect()[0]
-    art = (counts, float(tot["n_t"] or 0.0), float(tot["n_r"] or 0.0))
-    if name is not None:
-        store.save_df(name, store_token, counts,
+        return got and (got[0], float(got[1]["n_t"]), float(got[1]["n_r"]))
+
+    def save(name, art):
+        store.save_df(name, store_token, art[0],
                       extra={"n_t": art[1], "n_r": art[2]})
         # run THIS session on the persisted artifact too (reaps the
         # checkpoint blocks; identical values by construction)
-        art = (store.load_df(target.sparkSession, name, store_token)[0],
-               art[1], art[2])
-    if key is not None:
-        _RATIO_CACHE[key] = art
-    return art
+        return load(name)
+
+    return fitted(target.sparkSession, "dsir_ratio", cache_key,
+                  (text_col, n_buckets, alpha, bigrams, HASH_VERSION),
+                  fit, store, store_token, load, save)
 
 
 def _lr_from_counts(counts: DataFrame, n_t: float, n_r: float,
@@ -283,7 +265,6 @@ def _lr_from_counts(counts: DataFrame, n_t: float, n_r: float,
          + F.log(F.lit(n_r) + ab)).alias("lr"))
 
 
-_WARR_CACHE: dict = {}
 #: largest n_buckets the dense literal weight array is built for — past
 #: this the literal bloats every serialized task plan, so the
 #: broadcast-join scoring form stands (the DSIR paper uses 10k buckets;
@@ -292,20 +273,14 @@ _WARR_GATE = 65536
 
 
 def _bucket_lr_array(spark, counts: DataFrame, n_t: float, n_r: float,
-                     n_buckets: int, alpha: float,
-                     memo_key=None) -> list:
+                     n_buckets: int, alpha: float) -> list:
     """The smoothed log-ratio as a dense ``n_buckets``-long Python list
     (seen buckets from the persisted count artifact, unseen buckets at
     the c_t=c_r=0 price).  Collecting is a BOUNDED fit gate — the frame
     is at most ``n_buckets`` rows — and both the table and the default
     price are evaluated by the SAME Catalyst log expressions the join
     path uses, so the per-bucket values are bit-identical (a Python
-    ``math.log`` could differ in the last ulp from JVM ``Math.log``).
-    Memoized per (session, corpus, params): warm calls cost zero jobs."""
-    if memo_key is not None:
-        hit = _WARR_CACHE.get(memo_key)
-        if hit is not None:
-            return hit
+    ``math.log`` could differ in the last ulp from JVM ``Math.log``)."""
     ab = F.lit(float(alpha) * n_buckets)
     seen = {r["bucket"]: r["lr"]
             for r in _lr_from_counts(counts, n_t, n_r,
@@ -313,10 +288,7 @@ def _bucket_lr_array(spark, counts: DataFrame, n_t: float, n_r: float,
     default = spark.range(1).select(
         (F.log(F.lit(n_t) + ab) * -1
          + F.log(F.lit(n_r) + ab)).alias("v")).collect()[0]["v"]
-    warr = [seen.get(b, default) for b in range(n_buckets)]
-    if memo_key is not None:
-        _WARR_CACHE[memo_key] = warr
-    return warr
+    return [seen.get(b, default) for b in range(n_buckets)]
 
 
 def dsir_log_weights(docs: DataFrame, target: DataFrame,
@@ -413,10 +385,12 @@ def dsir_log_weights(docs: DataFrame, target: DataFrame,
                     .groupBy(id_col)
                     .agg(F.sum("lr").alias("logw"),
                          F.count("*").alias("n_grams")))
-        memo_key = (docs.sparkSession.sparkContext.applicationId,
-                    cache_key, text_col, n_buckets, alpha, bigrams)
-        warr = _bucket_lr_array(docs.sparkSession, counts, n_t, n_r,
-                                n_buckets, alpha, memo_key)
+        # memoized per (session, corpus, params): warm calls cost zero jobs
+        warr = memo(("dsir.warr", docs.sparkSession.sparkContext
+                     .applicationId, cache_key, text_col, n_buckets, alpha,
+                     bigrams, HASH_VERSION),
+                    lambda: _bucket_lr_array(docs.sparkSession, counts, n_t,
+                                             n_r, n_buckets, alpha))
         wlit = F.array(*[F.lit(float(v)) for v in warr])
         if row_local:
             bkts = hashed_gram_buckets(F.col(text_col), n_buckets, bigrams)

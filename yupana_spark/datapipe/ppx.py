@@ -38,8 +38,6 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-_PPX_CACHE: dict = {}
-
 #: rows per LM frame above which the scoring joins stop broadcasting
 VOCAB_GATE = 1 << 20
 
@@ -67,30 +65,39 @@ def bigram_lm_fit(target: DataFrame, text_col: str = "text",
     ``text.unigram_lm_scores`` (whitespace words of the lowercased text).
     Same memo + ArtifactStore contract as every fit in this package.
     """
-    from .artifacts import store_name
+    from .artifacts import fitted
+
+    spark = target.sparkSession
+
+    def load(name):
+        # one parameter hash names both frames: ppx_uni_<h> / ppx_big_<h>
+        got_u = store.load_df(spark, name, store_token)
+        got_b = store.load_df(spark, name.replace("ppx_uni_", "ppx_big_", 1),
+                              store_token)
+        if got_u is None or got_b is None:
+            return None
+        return (got_u[0], got_b[0], float(got_u[1]["N"]),
+                float(got_u[1]["V"]), got_u[1].get("rows"),
+                got_b[1].get("rows"))
+
+    def save(name, art):
+        uni, big, n_total, v_total, n_uni, n_big = art
+        store.save_df(name, store_token, uni,
+                      extra={"N": n_total, "V": v_total, "rows": n_uni})
+        store.save_df(name.replace("ppx_uni_", "ppx_big_", 1), store_token,
+                      big, extra={"rows": n_big})
+        return load(name)
+
+    return fitted(spark, "ppx_uni", cache_key, (text_col, uni_cap, big_cap),
+                  lambda: _bigram_lm_train(target, text_col, uni_cap,
+                                           big_cap),
+                  store, store_token, load, save)
+
+
+def _bigram_lm_train(target: DataFrame, text_col: str, uni_cap: int,
+                     big_cap: int):
     from .text import words
 
-    key = None
-    if cache_key is not None:
-        key = ("ppx", target.sparkSession.sparkContext.applicationId,
-               cache_key, text_col, uni_cap, big_cap)
-        hit = _PPX_CACHE.get(key)
-        if hit is not None:
-            return hit
-    nm_u = store_name("ppx_uni", cache_key, store, store_token,
-                      text_col, uni_cap, big_cap)
-    nm_b = store_name("ppx_big", cache_key, store, store_token,
-                      text_col, uni_cap, big_cap)
-    if nm_u is not None:
-        got_u = store.load_df(target.sparkSession, nm_u, store_token)
-        got_b = store.load_df(target.sparkSession, nm_b, store_token)
-        if got_u is not None and got_b is not None:
-            art = (got_u[0], got_b[0],
-                   float(got_u[1]["N"]), float(got_u[1]["V"]),
-                   got_u[1].get("rows"), got_b[1].get("rows"))
-            if key is not None:
-                _PPX_CACHE[key] = art
-            return art
     ws = target.select(words(F.lower(F.col(text_col))).alias("__ws"))
     toks = ws.select(F.explode("__ws").alias("w"))
     uc = toks.groupBy("w").agg(F.count("*").alias("c_u"))
@@ -120,18 +127,7 @@ def bigram_lm_fit(target: DataFrame, text_col: str = "text",
     # frame sizes are fit-time facts — carried in the artifact so every
     # scoring call can pick its join strategy WITHOUT probe jobs (the
     # counts run over the just-checkpointed frames, fit-once cost)
-    n_uni, n_big = uni.count(), big.count()
-    art = (uni, big, n_total, v_total, n_uni, n_big)
-    if nm_u is not None:
-        store.save_df(nm_u, store_token, uni,
-                      extra={"N": n_total, "V": v_total, "rows": n_uni})
-        store.save_df(nm_b, store_token, big, extra={"rows": n_big})
-        art = (store.load_df(target.sparkSession, nm_u, store_token)[0],
-               store.load_df(target.sparkSession, nm_b, store_token)[0],
-               n_total, v_total, n_uni, n_big)
-    if key is not None:
-        _PPX_CACHE[key] = art
-    return art
+    return uni, big, n_total, v_total, uni.count(), big.count()
 
 
 def bigram_xent_scores(df: DataFrame, art, text_col: str = "text",

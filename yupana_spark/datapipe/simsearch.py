@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from .artifacts import store_name as _artifact_store_name
+from .artifacts import fitted
 from .dedup import cosine
 
 
@@ -202,9 +202,6 @@ def sample_rows(df: DataFrame, cap: int, id_col: str,
             .limit(cap))
 
 
-_CENTERS_CACHE: dict = {}
-
-
 def kmeans_fit(df: DataFrame, n_centroids: int, vec_col: str = "embedding",
                id_col: str = "vec_id", seed: int = 42,
                sample_cap: int = 4096, iters: int = 20,
@@ -230,38 +227,39 @@ def kmeans_fit(df: DataFrame, n_centroids: int, vec_col: str = "embedding",
     as an ``.npz`` and a fresh session loads it with zero Spark jobs; a
     corpus write changes the token and refits.
     """
-    key = None
-    if cache_key is not None:
-        key = (df.sparkSession.sparkContext.applicationId, cache_key,
-               n_centroids, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("kmeans", cache_key, store, store_token,
-                       n_centroids, seed, sample_cap, iters)
-    if name is not None:
+    def fit():
+        X = _fit_sample(df, vec_col, id_col, sample_cap, n)
+        rng = np.random.RandomState(seed)
+        C = X[rng.choice(len(X), min(n_centroids, len(X)),
+                         replace=False)].copy()
+        for _ in range(iters):
+            dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            a = dmat.argmin(axis=1)
+            for j in range(len(C)):
+                if (a == j).any():
+                    C[j] = X[a == j].mean(axis=0)
+        return C
+
+    def load(name):
         got = store.load_arrays(name, store_token)
-        if got is not None:
-            C = got[0]["C"]
-            if key is not None:
-                _CENTERS_CACHE[key] = C
-            return C
+        return got and got[0]["C"]
+
+    def save(name, C):
+        store.save_arrays(name, store_token, C=C)
+        return C
+
+    return fitted(df.sparkSession, "kmeans", cache_key,
+                  (n_centroids, seed, sample_cap, iters, vec_col, id_col),
+                  fit, store, store_token, load, save)
+
+
+def _fit_sample(df: DataFrame, vec_col: str, id_col: str, sample_cap: int,
+                n: Optional[int]) -> np.ndarray:
+    """The bounded deterministic fit sample as a (rows, dim) matrix,
+    sorted by id so the fit is independent of partition/collect order."""
     pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
            .toPandas().sort_values(id_col))
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), min(n_centroids, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = dmat.argmin(axis=1)
-        for j in range(len(C)):
-            if (a == j).any():
-                C[j] = X[a == j].mean(axis=0)
-    if name is not None:
-        store.save_arrays(name, store_token, C=C)
-    if key is not None:
-        _CENTERS_CACHE[key] = C
-    return C
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
 
 
 def assign_cells(vec_col: Column, centers: np.ndarray, m: int = 1) -> Column:
@@ -389,51 +387,42 @@ def pq_fit(df: DataFrame, m: int = 8, ks: int = 256,
     approximates cosine.  Same train-once ``cache_key`` posture as the IVF
     coarse quantizer.
     """
-    key = None
-    if cache_key is not None:
-        key = ("pq", df.sparkSession.sparkContext.applicationId, cache_key,
-               m, ks, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("pq", cache_key, store, store_token,
-                       m, ks, seed, sample_cap, iters)
-    if name is not None:
+    def fit():
+        X = _fit_sample(df, vec_col, id_col, sample_cap, n)
+        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+        dim = X.shape[1]
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        dsub = dim // m
+        rng = np.random.RandomState(seed)
+        books = np.zeros((m, ks, dsub))
+        for j in range(m):
+            Xj = X[:, j * dsub:(j + 1) * dsub]
+            k_eff = min(ks, len(Xj))
+            C = Xj[rng.choice(len(Xj), k_eff, replace=False)].copy()
+            for _ in range(iters):
+                dmat = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+                a = dmat.argmin(axis=1)
+                for c in range(k_eff):
+                    if (a == c).any():
+                        C[c] = Xj[a == c].mean(axis=0)
+            books[j, :k_eff] = C
+            if k_eff < ks:
+                # pad unused slots far away so they are never argmin winners
+                books[j, k_eff:] = 1e6
+        return books
+
+    def load(name):
         got = store.load_arrays(name, store_token)
-        if got is not None:
-            books = got[0]["books"]
-            if key is not None:
-                _CENTERS_CACHE[key] = books
-            return books
-    pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
-           .toPandas().sort_values(id_col))
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    rng = np.random.RandomState(seed)
-    books = np.zeros((m, ks, dsub))
-    for j in range(m):
-        Xj = X[:, j * dsub:(j + 1) * dsub]
-        k_eff = min(ks, len(Xj))
-        C = Xj[rng.choice(len(Xj), k_eff, replace=False)].copy()
-        for _ in range(iters):
-            dmat = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = dmat.argmin(axis=1)
-            for c in range(k_eff):
-                if (a == c).any():
-                    C[c] = Xj[a == c].mean(axis=0)
-        books[j, :k_eff] = C
-        if k_eff < ks:
-            # pad unused slots far away so they are never argmin winners
-            books[j, k_eff:] = 1e6
-    if name is not None:
+        return got and got[0]["books"]
+
+    def save(name, books):
         store.save_arrays(name, store_token, books=books)
-    if key is not None:
-        _CENTERS_CACHE[key] = books
-    return books
+        return books
+
+    return fitted(df.sparkSession, "pq", cache_key,
+                  (m, ks, seed, sample_cap, iters, vec_col, id_col),
+                  fit, store, store_token, load, save)
 
 
 def pq_encode(vec_col: Column, codebooks: np.ndarray) -> Column:
@@ -530,65 +519,55 @@ def ivfadc_fit(df: DataFrame, n_centroids: int = 16, m: int = 8,
     ``cache_key`` memoization as ``kmeans_fit``/``pq_fit``); returns
     ((n_centroids, dim), (m, ks, dim/m)) float64 arrays to close over.
     """
-    key = None
-    if cache_key is not None:
-        key = ("ivfadc", df.sparkSession.sparkContext.applicationId,
-               cache_key, n_centroids, m, ks, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("ivfadc", cache_key, store, store_token,
-                       n_centroids, m, ks, seed, sample_cap, iters)
-    if name is not None:
-        got = store.load_arrays(name, store_token)
-        if got is not None:
-            art = (got[0]["centers"], got[0]["books"])
-            if key is not None:
-                _CENTERS_CACHE[key] = art
-            return art
-    pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
-           .toPandas().sort_values(id_col))
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    rng = np.random.RandomState(seed)
-    k_c = min(n_centroids, len(X))
-    C = X[rng.choice(len(X), k_c, replace=False)].copy()
-    for _ in range(iters):
-        dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = dmat.argmin(axis=1)
-        for c in range(k_c):
-            if (a == c).any():
-                C[c] = X[a == c].mean(axis=0)
-    centers = np.zeros((n_centroids, dim))
-    centers[:k_c] = C
-    if k_c < n_centroids:
-        centers[k_c:] = 1e6          # never an argmin winner
-    R = X - centers[((X[:, None, :] - centers[None, :k_c, :]) ** 2)
-                    .sum(axis=2).argmin(axis=1)]
-    dsub = dim // m
-    books = np.zeros((m, ks, dsub))
-    for j in range(m):
-        Rj = R[:, j * dsub:(j + 1) * dsub]
-        k_eff = min(ks, len(Rj))
-        B = Rj[rng.choice(len(Rj), k_eff, replace=False)].copy()
+    def fit():
+        X = _fit_sample(df, vec_col, id_col, sample_cap, n)
+        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+        dim = X.shape[1]
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        rng = np.random.RandomState(seed)
+        k_c = min(n_centroids, len(X))
+        C = X[rng.choice(len(X), k_c, replace=False)].copy()
         for _ in range(iters):
-            dmat = ((Rj[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
+            dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             a = dmat.argmin(axis=1)
-            for c in range(k_eff):
+            for c in range(k_c):
                 if (a == c).any():
-                    B[c] = Rj[a == c].mean(axis=0)
-        books[j, :k_eff] = B
-        if k_eff < ks:
-            books[j, k_eff:] = 1e6
-    art = (centers, books)
-    if name is not None:
-        store.save_arrays(name, store_token, centers=centers, books=books)
-    if key is not None:
-        _CENTERS_CACHE[key] = art
-    return art
+                    C[c] = X[a == c].mean(axis=0)
+        centers = np.zeros((n_centroids, dim))
+        centers[:k_c] = C
+        if k_c < n_centroids:
+            centers[k_c:] = 1e6          # never an argmin winner
+        R = X - centers[((X[:, None, :] - centers[None, :k_c, :]) ** 2)
+                        .sum(axis=2).argmin(axis=1)]
+        dsub = dim // m
+        books = np.zeros((m, ks, dsub))
+        for j in range(m):
+            Rj = R[:, j * dsub:(j + 1) * dsub]
+            k_eff = min(ks, len(Rj))
+            B = Rj[rng.choice(len(Rj), k_eff, replace=False)].copy()
+            for _ in range(iters):
+                dmat = ((Rj[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
+                a = dmat.argmin(axis=1)
+                for c in range(k_eff):
+                    if (a == c).any():
+                        B[c] = Rj[a == c].mean(axis=0)
+            books[j, :k_eff] = B
+            if k_eff < ks:
+                books[j, k_eff:] = 1e6
+        return centers, books
+
+    def load(name):
+        got = store.load_arrays(name, store_token)
+        return got and (got[0]["centers"], got[0]["books"])
+
+    def save(name, art):
+        store.save_arrays(name, store_token, centers=art[0], books=art[1])
+        return art
+
+    return fitted(df.sparkSession, "ivfadc", cache_key,
+                  (n_centroids, m, ks, seed, sample_cap, iters, vec_col,
+                   id_col), fit, store, store_token, load, save)
 
 
 def ivfadc_encode(vec_col: Column, centers: np.ndarray,

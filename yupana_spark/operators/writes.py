@@ -11,9 +11,10 @@ partition pruning replaces the reference's baseTime range scans).  Upsert =
 key-based merge (existing rows whose primary key collides with incoming rows
 are replaced) implemented as ``left_anti`` + ``unionByName`` + atomic swap —
 on a production lake this maps 1:1 onto Delta/Iceberg MERGE; plain parquet is
-used here because the container ships without Delta.  At 100 TB the merge
-only rewrites the partitions that contain incoming keys (partition values are
-derived from incoming data and pushed as a filter on the existing side).
+used here because the container ships without Delta.  Every upsert rewrites
+the WHOLE table: all month partitions are re-written into a fresh directory
+and swapped in, however few of them hold incoming keys.  A merge that
+rewrites only the partitions holding incoming keys is not implemented.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from typing import Any, Dict, Iterable, Optional, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..memo import forget, memo
 from ..schema import Schema, Table
 
 BUCKET_COL = "__month"
@@ -45,22 +47,20 @@ TOKEN_PIN = "__token_pin"
 # wrong column (advice r9)
 BUCKET_PIN = "__bucket_pin"
 
-_FIXER_UDFS: dict = {}
-
 
 def _item_fixer_udf(fn):
     """Vectorized (Arrow) wrapper for the schema's item_fixer hook; memoized
     per hook so repeated upserts reuse one UDF registration."""
     from pyspark.sql import types as T
 
-    key = id(fn)
-    if key not in _FIXER_UDFS:
+    def build():
         @F.pandas_udf(T.StringType())
         def fixer(s: pd.Series) -> pd.Series:
             return s.map(lambda v: None if v is None else fn(v))
 
-        _FIXER_UDFS[key] = fixer
-    return _FIXER_UDFS[key]
+        return fixer
+
+    return memo(("writes.fixer", fn), build)
 
 
 @_dataclasses.dataclass
@@ -345,15 +345,18 @@ class Warehouse:
         self._swap_and_invalidate(table, tmp)
 
     def _swap_and_invalidate(self, table: str, tmp: str) -> None:
-        """Install ``tmp`` as the live table dir and purge volume caches.
+        """Install ``tmp`` as the live table dir and forget the memos keyed
+        on the table's path.
 
         Two adjacent renames (old out, new in) instead of rmtree+rename:
         the not-exists window shrinks from an unbounded directory delete
         to microseconds, and a crash between the renames leaves the data
-        recoverable in the ``.old`` dir instead of gone.  A concurrent
-        reader in that window still falls back to the fixture — callers
-        that need stronger isolation must serialize writes with reads
-        (the reference's HBase gets this from region-server atomicity).
+        recoverable in the ``.old`` dir instead of gone.  The old directory
+        is then deleted, so a concurrent read planned against it before
+        the swap fails with FileNotFound when it executes; a read planned
+        inside the rename window falls back to the fixture.  Callers that
+        need isolation must serialize writes with reads (the reference's
+        HBase gets this from region-server atomicity).
         """
         import glob as _glob
         import logging as _logging
@@ -408,15 +411,10 @@ class Warehouse:
                 _logging.getLogger(__name__).warning(
                     "delete of %s failed (%s) — leaving it for the next "
                     "write of %r to sweep", old, e, table)
-        # volume-gate cache entries for this table are now stale — the next
-        # query must re-stat the warehouse copy, or tune_for_volume would
+        # memos keyed on this table's path are now stale — e.g. the volume
+        # gate must re-stat the warehouse copy, or tune_for_volume would
         # keep the pre-write posture for a much larger table
-        from ..compiler import Tsdb
-        with Tsdb._BYTES_CACHE_LOCK:
-            for k in [k for k in Tsdb._BYTES_CACHE
-                      if k[1] == self.root and k[2] == table]:
-                del Tsdb._BYTES_CACHE[k]
-            Tsdb._BYTES_EPOCH += 1   # invalidate in-flight reader stats
+        forget(lambda k: final in k)
 
     def compact(self, table: str, max_records_per_file: int = 0) -> dict:
         """Rewrite ``table`` with one output file per time-bucket partition

@@ -16,13 +16,13 @@ the time-bucket partition column used for partition pruning at scale.
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 from typing import Callable, Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import types as yt
+from .memo import forget, memo
 
 
 # base-DataFrame memo per (session, path): a plain ``spark.read.parquet``
@@ -32,25 +32,12 @@ from . import types as yt
 # immutable logical plan — filters/projections compose on top per query, so
 # pushdown and pruning are unaffected.  Keyed by applicationId (stable per
 # session, never aliased the way id() can be).
-_PARQUET_CACHE: Dict[Tuple[str, str], DataFrame] = {}
-
-
 def cached_parquet(spark: SparkSession, path: str,
                    time_col: Optional[str] = None) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _PARQUET_CACHE.get(key)
-    if df is None:
-        df = _parallel_read(spark, path, time_col)
-        _PARQUET_CACHE[key] = df
-    return df
+    return memo(("schema.parquet", spark.sparkContext.applicationId, path),
+                lambda: _parallel_read(spark, path, time_col))
 
 
-# session-scoped re-ingested copies of single-row-group fixture files
-# (path -> rewritten dir); see _parallel_read.  The lock serializes the
-# one-time rewrite across threads (pgwire serves concurrent connections):
-# without it two first-touches both pay the rewrite and race the memo.
-_SPLIT_CACHE: Dict[Tuple[str, str], str] = {}
-_SPLIT_LOCK = threading.Lock()
 _SPLIT_MIN_ROWS = 50_000       # only fact-sized tables; dims broadcast anyway
 _SPLIT_MAX_BYTES = 256 << 20   # fixture-shape gate — never triggers at scale
 # ~32k rows/file: measured sweet spot on local[32] — light aggregates over
@@ -78,67 +65,56 @@ def _parallel_read(spark: SparkSession, path: str,
     pruning are untouched (plain parquet scan), and the per-file min/max
     time stats now PRUNE files under the mandatory time condition, which is
     exactly the at-scale layout.  Small dims and multi-row-group inputs are
-    returned as-is; nothing under /root/testdata is ever written.
+    returned as-is; nothing under /root/testdata is ever written.  The
+    rewritten dir (or None: left as-is) is memoized per (session, path),
+    so concurrent first touches (pgwire connections) pay one rewrite.
     """
-    df = spark.read.parquet(path)
-    # double-checked memo: steady-state reads of an already-rewritten path
-    # never touch the lock; only the one-time rewrite serializes
-    done = _SPLIT_CACHE.get((spark.sparkContext.applicationId, path))
-    if done is not None:
-        return spark.read.parquet(done)
-    with _SPLIT_LOCK:
-        return _parallel_read_locked(spark, path, time_col, df)
-
-
-def _parallel_read_locked(spark: SparkSession, path: str,
-                          time_col: Optional[str],
-                          df: DataFrame) -> DataFrame:
     try:
-        done = _SPLIT_CACHE.get((spark.sparkContext.applicationId, path))
-        if done is not None:
-            return spark.read.parquet(done)
-        import pyarrow.parquet as pq
-
-        if (not os.path.isfile(path)
-                or os.path.getsize(path) >= _SPLIT_MAX_BYTES):
-            return df
-        meta = pq.ParquetFile(path)
-        rows = meta.metadata.num_rows
-        if rows < _SPLIT_MIN_ROWS or meta.num_row_groups >= 4:
-            return df
-        import atexit
-        import shutil
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="yupana_ingest_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        cpus = spark.sparkContext.defaultParallelism
-        nfiles = min(cpus, max(4, rows // _SPLIT_ROWS_PER_FILE))
-        # driver-side pyarrow rewrite (the gate bounds it at 256 MB): one
-        # read, sort by time, slice into nfiles — column types are byte-
-        # identical to the source, and a Spark rewrite here would itself be
-        # the one single-threaded scan we are eliminating (plus a range-
-        # sampling second pass)
-        tbl = pq.read_table(path)
-        if time_col and time_col in tbl.column_names:
-            tbl = tbl.sort_by([(time_col, "ascending")])
-        per_file = -(-rows // nfiles)
-        for i in range(nfiles):
-            chunk = tbl.slice(i * per_file, per_file)
-            if chunk.num_rows:
-                pq.write_table(chunk, os.path.join(out, f"part-{i:05d}.parquet"))
-        _SPLIT_CACHE[(spark.sparkContext.applicationId, path)] = out
-        return spark.read.parquet(out)
+        done = memo(("schema.split", spark.sparkContext.applicationId, path),
+                    lambda: _split_copy(spark, path, time_col))
     except Exception:  # noqa: BLE001 — layout fixing must never fail a read
-        return df
+        done = None
+    return spark.read.parquet(done if done is not None else path)
+
+
+def _split_copy(spark: SparkSession, path: str,
+                time_col: Optional[str]) -> Optional[str]:
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(path) or os.path.getsize(path) >= _SPLIT_MAX_BYTES:
+        return None
+    meta = pq.ParquetFile(path)
+    rows = meta.metadata.num_rows
+    if rows < _SPLIT_MIN_ROWS or meta.num_row_groups >= 4:
+        return None
+    import atexit
+    import shutil
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix="yupana_ingest_")
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    cpus = spark.sparkContext.defaultParallelism
+    nfiles = min(cpus, max(4, rows // _SPLIT_ROWS_PER_FILE))
+    # driver-side pyarrow rewrite (the gate bounds it at 256 MB): one
+    # read, sort by time, slice into nfiles — column types are byte-
+    # identical to the source, and a Spark rewrite here would itself be
+    # the one single-threaded scan we are eliminating (plus a range-
+    # sampling second pass)
+    tbl = pq.read_table(path)
+    if time_col and time_col in tbl.column_names:
+        tbl = tbl.sort_by([(time_col, "ascending")])
+    per_file = -(-rows // nfiles)
+    for i in range(nfiles):
+        chunk = tbl.slice(i * per_file, per_file)
+        if chunk.num_rows:
+            pq.write_table(chunk, os.path.join(out, f"part-{i:05d}.parquet"))
+    return out
 
 
 def invalidate_parquet_cache(path_prefix: str = "") -> None:
     """Drop cached reads under a path prefix (used after writes)."""
-    for k in [k for k in _PARQUET_CACHE if k[1].startswith(path_prefix)]:
-        del _PARQUET_CACHE[k]
-    for k in [k for k in _SPLIT_CACHE if k[1].startswith(path_prefix)]:
-        del _SPLIT_CACHE[k]
+    forget(lambda k: k[0] in ("schema.parquet", "schema.split")
+           and k[2].startswith(path_prefix))
 
 
 @dataclass(frozen=True)

@@ -13,8 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-
-_CONFED_SESSIONS: set = set()
+from .memo import memo
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
@@ -26,10 +25,12 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     Applied once per session (memoized by applicationId): every Tsdb/datapipe
     entry calls this, and nine py4j conf round trips per query add up.
     """
-    app = spark.sparkContext.applicationId
-    if app in _CONFED_SESSIONS:
-        return spark
-    _CONFED_SESSIONS.add(app)
+    memo(("session.confs", spark.sparkContext.applicationId),
+         lambda: _apply_engine_confs(spark))
+    return spark
+
+
+def _apply_engine_confs(spark: SparkSession) -> bool:
     cpus = spark.sparkContext.defaultParallelism
     for k, v in {
         "spark.sql.session.timeZone": "UTC",
@@ -54,7 +55,7 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — non-settable on some builds
             pass
-    return spark
+    return True
 
 
 SMALL_INPUT_BYTES = 1 << 30
@@ -81,6 +82,9 @@ def tune_for_volume(spark: SparkSession, nbytes: int) -> None:
             parts = max(4, min(cpus, int(nbytes // (32 << 20)) + 4))
             spark.conf.set("spark.sql.adaptive.enabled", "false")
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            spark.conf.set(
+                "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+                "false")
         else:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.shuffle.partitions",
@@ -96,8 +100,8 @@ def tune_for_volume(spark: SparkSession, nbytes: int) -> None:
             # floors coalescing at defaultParallelism (measured 1.39x on
             # dp_neardup_scale at 10x, 4/4 pairs; neutral at fixture
             # volumes where the per-stage data is sub-MB).  The
-            # latency-first false stays the SMALL-input posture (set at
-            # session init; the small branch above turns AQE off anyway).
+            # latency-first false stays the SMALL-input posture (set by
+            # the small branch above, which also turns AQE off).
             spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "true")
